@@ -367,6 +367,14 @@ _HREF_ATTR = re.compile(
 _SRC_ATTR = re.compile(
     r"""\bsrc\s*=\s*("([^"]*)"|'([^']*)'|([^\s"'>]+))""", re.IGNORECASE
 )
+# script/style bodies are CDATA to html.parser: up to the closing tag (or
+# the end of the page) they are text, so tag-like strings inside them
+# (document.write, templates) are not links. Keeps the opening tag, whose
+# src still counts; a self-closed <script/> opens no body.
+_CDATA_BODY = re.compile(
+    r"(<(script|style)\b[^>]*?(?<!/)>).*?(?:</\s*\2\s*>|\Z)",
+    re.IGNORECASE | re.DOTALL,
+)
 
 
 def _attr_value(m: re.Match) -> str:
@@ -387,9 +395,10 @@ def harvest_dom_hrefs_regex(text: str) -> set[str]:
     Attribute values are entity-UNESCAPED (html.unescape) because the
     reference's bs4 walk returns unescaped values: real pages write
     ``?id=1&amp;how=up`` and the crawler must enqueue ``?id=1&how=up`` —
-    parity pinned on the reference's HackerNews.html fixture in
-    tests/test_urlparser_parity.py."""
+    parity pinned against a stdlib HTMLParser walk of
+    tests/resources/dom_parity.html in tests/test_urlparser_parity.py."""
     hrefs: set[str] = set()
+    text = _CDATA_BODY.sub(r"\1", text)
     for tag in _A_LINK_TAG.finditer(text):
         m = _HREF_ATTR.search(tag.group(0))
         if m is not None:

@@ -25,7 +25,9 @@ Scale design (10^10 frontier / 1000 executors):
   tier makespan is recorded in the metrics, and the hot-host rate budget —
   not Spark — is the throughput floor it exposes.
 - per-tier localCheckpoint truncates lineage; checkpoint_dir writes
-  parquet round snapshots + manifest for resume (plans/checkpoint.py).
+  parquet round snapshots + a manifest (state, schemas, part-file
+  lineage from the parquet footers) for resume: one Spark job per table
+  per round, and re-reads run none (plans/checkpoint.py).
 """
 
 from __future__ import annotations
@@ -331,6 +333,16 @@ class SparkCrawler:
         )
         self.tier_chunk_rows = tier_chunk_rows
         assert budget_mode in ("bfs", "host-proportional")
+        # host-proportional quotas come from the whole tier's per-host
+        # demand; per-chunk quotas would select a different page set
+        assert not (
+            tier_chunk_rows is not None
+            and budget_mode == "host-proportional"
+            and self.cfg.max_page_num > 0
+        ), (
+            "tier_chunk_rows with a host-proportional page budget picks "
+            "per-chunk quotas — run budgeted host-proportional unchunked"
+        )
         self.budget_mode = budget_mode
         self.trap_cap = trap_cap
         self.trap_prefix_depth = trap_prefix_depth
@@ -435,8 +447,10 @@ class SparkCrawler:
         carrying the full FRONTIER_SCHEMA columns — the Iceberg-snapshot
         shape (resume() enters the loop from exactly this table read back
         from a round snapshot). The CALLER guarantees url_norm is
-        normalized + unique and discovery_seq is dense from 0 — the
-        contract every frontier table the crawler itself writes satisfies.
+        normalized + unique and discovery_seq orders the seeds — the
+        contract every frontier table the crawler itself writes satisfies
+        (the scope filter below may leave gaps in the sequence, as in
+        run()).
         For raw url lists/tables use run()/run_from_urls(), which
         normalize + dedup + rank first. Skipping those jobs is the point:
         a prepared 10^10-row frontier pays zero per-run seed cost beyond
@@ -816,12 +830,13 @@ class SparkCrawler:
         ≤``tier_chunk_rows`` rows — the heap mitigation for tiers whose
         extraction checkpoint exceeds a single JVM's storage memory.
 
-        Chunk boundaries are ARITHMETIC on discovery_seq: every frontier
-        the crawler builds carries a dense consecutive seq range (seed
-        frontiers dense from 0; enqueue assigns next_seq..next_seq+n-1),
-        so splitting needs one 2-value min/max agg and per-chunk range
-        filters over the already-checkpointed frontier — no sort, no
-        shuffle, no extra materialization.
+        Chunk boundaries are ARITHMETIC on discovery_seq: one 2-value
+        min/max agg and per-chunk range filters over the
+        already-checkpointed frontier — no sort, no shuffle, no extra
+        materialization. Tiers past the seeds carry a dense seq range
+        (enqueue assigns next_seq..next_seq+n-1), so their chunks are
+        even; the seed tier may have gaps (seeds are numbered before the
+        scope filter runs), which only makes its chunk sizes uneven.
 
         Exactness: children of chunk i's parents carry min_parent_seq
         values strictly below chunk i+1's (seq order), which is the
@@ -838,6 +853,12 @@ class SparkCrawler:
             F.max("discovery_seq").alias("hi"),
         ).collect()[0]
         lo, hi = int(b["lo"]), int(b["hi"])
+        # past the seed tier a gap means the frontier was not built by
+        # enqueue (e.g. an edited snapshot): refuse it
+        assert st["depth"] == 0 or hi - lo + 1 == n_frontier, (
+            f"frontier discovery_seq is not dense: [{lo}, {hi}] holds "
+            f"{n_frontier} rows"
+        )
         n_chunks = -(-n_frontier // self.tier_chunk_rows)
         step = -(-(hi - lo + 1) // n_chunks)
         segments: list[DataFrame] = []
@@ -1274,10 +1295,11 @@ class SparkCrawler:
             tables["host_delays"] = st["host_delays"]
         lineage = ckpt.write_round(self.checkpoint_dir, state, tables)
         st["tiers"][-1]["lineage"] = {k: len(v) for k, v in lineage.items()}
-        # re-read snapshots so downstream lineage points at parquet, not RAM
+        # re-read snapshots so downstream lineage points at parquet, not RAM;
+        # the known schema spares an inference job per table
         base = ckpt._round_dir(self.checkpoint_dir, st["depth"])
-        for name in tables:
-            st[name] = self.spark.read.parquet(f"{base}/{name}")
+        for name, df in tables.items():
+            st[name] = self.spark.read.schema(df.schema).parquet(f"{base}/{name}")
         # seen is now a single parquet leaf — restart the union-of-segments
         # count so the 16-tier flatten doesn't fire early and pay an extra
         # full-table localCheckpoint copy the snapshot already provides

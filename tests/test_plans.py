@@ -243,15 +243,79 @@ class TestCheckpointResume:
         assert resumed.total_page == full.total_page
 
     def test_lineage_recorded(self, spark, tmp_path):
+        """The snapshot contract: each table's lineage (its non-empty part
+        files) sums to the table's rows, read_round returns the written
+        schemas (and refuses a manifest without them), and neither
+        read_round nor the crawler's post-snapshot re-reads start a Spark
+        job (no schema inference, no lineage aggregation)."""
         import json, os
+
+        from pyspark.sql import types as T
+
+        from secretscraper_spark.plans import checkpoint as ckpt
+
         pdf = generate_pages_pandas(100, 4)
         pages = spark.createDataFrame(pdf.drop(columns=["bytes"]))
         ck = str(tmp_path / "ck2")
-        SparkCrawler(spark, pages, CrawlConfig(max_depth=1), checkpoint_dir=ck).run(seeds_for(4))
-        with open(os.path.join(ck, "round=0", "manifest.json")) as f:
-            manifest = json.load(f)
-        assert "lineage" in manifest and "seen" in manifest["lineage"]
+        sc = spark.sparkContext
+        group = "test-snapshot-contract"
+
+        def jobs():
+            return set(sc.statusTracker().getJobIdsForGroup(group))
+
+        crawler = SparkCrawler(spark, pages, CrawlConfig(max_depth=1), checkpoint_dir=ck)
+        write_round, snapshot = ckpt.write_round, crawler._snapshot
+        extra_jobs = []  # per snapshot: jobs started outside write_round
+
+        def counted_write(*args):
+            before = jobs()
+            out = write_round(*args)
+            extra_jobs[-1] -= len(jobs() - before)
+            return out
+
+        def counted_snapshot(st):
+            before = jobs()
+            extra_jobs.append(0)
+            snapshot(st)
+            extra_jobs[-1] += len(jobs() - before)
+
+        sc.setJobGroup(group, group)
+        ckpt.write_round, crawler._snapshot = counted_write, counted_snapshot
+        try:
+            crawler.run(seeds_for(4))
+            before = jobs()
+            rounds = {d: ckpt.read_round(spark, ck, d) for d in (0, 1)}
+            read_jobs = len(jobs() - before)
+        finally:
+            ckpt.write_round = write_round
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert extra_jobs == [0, 0]
+        assert read_jobs == 0
+
+        for d, (state, tables) in rounds.items():
+            assert state.depth == d
+            rd = os.path.join(ck, f"round={d}")
+            with open(os.path.join(rd, "manifest.json")) as f:
+                manifest = json.load(f)
+            assert set(tables) == set(manifest["lineage"]) == set(manifest["schemas"])
+            for name, df in tables.items():
+                inferred = spark.read.parquet(os.path.join(rd, name))
+                assert df.schema == inferred.schema, (d, name)
+                # file sources read every column as nullable
+                written = T.StructType.fromJson(json.loads(manifest["schemas"][name]))
+                assert df.schema.simpleString() == written.simpleString(), (d, name)
+                lineage = manifest["lineage"][name]
+                assert all(p["rows"] > 0 for p in lineage), (d, name)
+                assert sum(p["rows"] for p in lineage) == df.count(), (d, name)
         assert sum(p["rows"] for p in manifest["lineage"]["seen"]) > 0
+
+        # a manifest without schemas (the older format) is refused, never
+        # read by inference
+        del manifest["schemas"]
+        with open(os.path.join(rd, "manifest.json"), "w") as f:
+            json.dump(manifest, f)
+        with pytest.raises(AssertionError, match="schemas"):
+            ckpt.read_round(spark, ck, 1)
 
 
 class TestPacedFetch:
@@ -874,13 +938,110 @@ class TestSyntheticFetch:
         # the split actually happened: more tier records, chunk-tagged
         assert len(chunked.tiers) > len(mono.tiers)
         assert any("chunk" in t for t in chunked.tiers)
-        # chunk-grained state folds are refused, not approximated
-        with pytest.raises(AssertionError):
-            SparkCrawler(
+        # chunk-grained state folds and per-chunk host quotas are
+        # refused, not approximated
+        # (cfg keeps the default max_page_num=1000 budget)
+        for kw in ({"quarantine_fails": 2}, {"budget_mode": "host-proportional"}):
+            with pytest.raises(AssertionError):
+                SparkCrawler(
+                    spark, empty, cfg, fetch_mode="mapped",
+                    fetch_map_fn=sg.synthetic_fetch_map(n_pages, n_hosts),
+                    tier_chunk_rows=500, **kw,
+                )
+        # an unbudgeted host-proportional cut takes every page: allowed
+        SparkCrawler(
+            spark, empty, CrawlConfig(max_depth=2, max_page_num=0),
+            fetch_mode="mapped",
+            fetch_map_fn=sg.synthetic_fetch_map(n_pages, n_hosts),
+            tier_chunk_rows=500, budget_mode="host-proportional",
+        )
+
+    def test_tier_chunking_gapped_seed_tier(self, spark):
+        """Seeds are numbered before the scope filter runs, so a
+        blacklisted seed leaves a gap in the seed tier's discovery_seq.
+        Chunk boundaries are seq ranges, so gaps only make chunks uneven
+        (here two chunks fall wholly inside the gap and are empty): the
+        chunked run must still match the monolithic one bit-for-bit."""
+        from pyspark.sql import functions as F
+
+        from secretscraper_spark.sources import sitegen as sg
+
+        n_pages, n_hosts = 4000, 8
+        cfg = CrawlConfig(max_depth=1, black_list=["site0.test"])
+        urls = [sg.url_for(i, n_hosts) for i in range(0, n_pages, 37)]
+        hot = [u for u in urls if "site0.test/" in u]  # sub-hosts too
+        rest = [u for u in urls if u not in hot]
+        # the blacklisted host's seeds as one block in the middle
+        seeds = rest[: len(rest) // 2] + hot + rest[len(rest) // 2:]
+        empty = spark.createDataFrame(
+            [], "url_norm string, status string, content_type string, "
+            "content_length long, caption string",
+        )
+
+        def mk(chunk):
+            return SparkCrawler(
                 spark, empty, cfg, fetch_mode="mapped",
                 fetch_map_fn=sg.synthetic_fetch_map(n_pages, n_hosts),
-                tier_chunk_rows=500, quarantine_fails=2,
+                fold_outputs=True, tier_chunk_rows=chunk,
             )
+
+        mono = mk(None).run(seeds)
+        chunked = mk(10).run(seeds)
+
+        seeded = mono.seen.filter("depth = 0").agg(
+            F.min("discovery_seq"), F.max("discovery_seq"), F.count("*")
+        ).collect()[0]
+        assert seeded[1] - seeded[0] + 1 == len(seeds) > seeded[2]  # gapped
+
+        def digest(df):
+            row = df.select(
+                F.sum(
+                    F.xxhash64("url_norm", "depth", "discovery_seq")
+                    .cast("decimal(38,0)")
+                ).alias("d")
+            ).collect()[0]
+            return str(row["d"])
+
+        assert digest(chunked.seen) == digest(mono.seen)
+        assert chunked.total_page == mono.total_page
+        assert chunked.folded == mono.folded
+        assert any(t["depth"] == 0 and "chunk" in t for t in chunked.tiers)
+
+    def test_tier_chunking_refuses_sparse_frontier(self, spark, tmp_path):
+        """Past the seed tier every frontier comes from enqueue, which
+        numbers it densely. A gapped one (here an edited round snapshot)
+        fails loudly instead of being chunked."""
+        import os
+
+        from secretscraper_spark.sources import sitegen as sg
+
+        n_pages, n_hosts = 3000, 8
+        cfg = CrawlConfig(max_depth=2)
+        seeds = [sg.url_for(i, n_hosts) for i in range(0, n_pages, 41)]
+        empty = spark.createDataFrame(
+            [], "url_norm string, status string, content_type string, "
+            "content_length long, caption string",
+        )
+
+        def mk(ck):
+            return SparkCrawler(
+                spark, empty, cfg, fetch_mode="mapped",
+                fetch_map_fn=sg.synthetic_fetch_map(n_pages, n_hosts),
+                fold_outputs=True, tier_chunk_rows=100, checkpoint_dir=ck,
+            )
+
+        ck = str(tmp_path / "ck_sparse")
+        mk(ck).run(seeds)
+        path = os.path.join(ck, "round=0", "frontier")
+        frontier = spark.read.parquet(path)
+        pdf = frontier.toPandas()
+        kept = pdf[pdf["discovery_seq"] % 2 == 0]
+        assert len(kept) > 100  # the resumed tier is chunked
+        spark.createDataFrame(kept, frontier.schema).write.mode(
+            "overwrite"
+        ).parquet(path)
+        with pytest.raises(AssertionError, match="not dense"):
+            mk(ck).resume(from_round=0)
 
     def test_tier_chunking_resume_parity(self, spark, tmp_path):
         """Chunked tiers × checkpoint-resume: snapshots land once per
