@@ -119,9 +119,8 @@ class ExternalEntry:
 @click.option("--pages", help="Pages-store parquet (fetch-join mode)",
               type=click.STRING)
 @click.option("--master", help="Spark master", type=click.STRING)
-@click.option("--seen-filter", help="URL-seen prefilter",
-              type=click.Choice(
-                  ["exact", "broadcast-bloom", "bucketed-bloom", "cuckoo"]))
+@click.option("--seen-filter", help="URL-seen check",
+              type=click.Choice(["exact", "bucketed-bloom"]))
 @click.option("--budget-mode", help="Tier page-budget cut",
               type=click.Choice(["bfs", "host-proportional"]))
 @click.option("--trap-cap", help="URL-explosion enqueue gate: stop enqueuing "

@@ -114,12 +114,11 @@ class CrawlConfig:
     respect_robots: bool = False
     # engine knobs
     shuffle_partitions: int = 32
-    bloom_capacity: int = 1 << 20
+    # sharded bloom seen filter (seen_filter='bucketed-bloom'): false-
+    # positive rate, number of key-hash shards and per-shard capacity.
+    # At the 10^10 north-rule scale these become ~10^4 buckets × ~10^6
+    # keys; no single machine ever holds more than one shard either way.
     bloom_fpp: float = 0.01
-    # sharded seen-set (seen_filter='bucketed-bloom'|'cuckoo'): number of
-    # key-hash shards and per-shard capacity. At the 10^10 north-rule scale
-    # these become ~10^4 buckets × ~10^6 keys; no single machine ever holds
-    # more than one shard either way.
     seen_n_buckets: int = 64
     seen_bucket_capacity: int = 1 << 16
     # fetch-join strategy: broadcast the frontier tier while it fits an

@@ -1,18 +1,24 @@
-"""Partitioned bloom filter for the URL-seen set (north rule).
+"""Sharded bloom filter for the URL-seen set (north rule).
 
 The reference keeps `visited_urls` as an exact in-memory Python set
-(crawler.py:115) — dead at ~10^8 URLs. The scale path:
+(crawler.py:115) — dead at ~10^8 URLs. A single bitmap does not scale
+either: 10^10 URLs at 1% fpp is ≈12 GB. So the filter is sharded by key
+hash: bucket b owns one bitmap covering only the keys with
+pmod(xxhash64(key), B) == b, kept as a (bucket, bitmap, bits, k) table.
+Build, per-tier update and probe all run on the executors, grouped by
+bucket; no machine ever holds more than one shard.
 
-  1. build: every seen partition hashes its url_hash values into a bitmap
-     (numpy, vectorized); bitmaps OR-reduce to the driver and broadcast.
-  2. probe: candidate children test membership vectorized; bloom-negative
-     rows are DEFINITELY unseen → skip the expensive anti-join for them;
-     bloom-positive rows go through the exact anti-join (no false drops).
+Correctness never depends on the filter: it only routes rows. The probe
+emits the shard-POSITIVE candidate keys, those are checked exactly
+against seen, and the answer is one JVM anti-join of the candidates
+against the truly-seen positives.
 
-At 10^10 the single broadcast bitmap becomes per-host-hash-bucket bitmaps
-stored as a (bucket, bitmap) table co-partitioned with the frontier — same
-two functions, keyed build/probe. Correctness never depends on the bloom:
-it only routes rows between "skip join" and "exact join".
+What the filter does NOT spare: when seen is too big to broadcast, the
+exact `positives ⋉ seen` check hash-shuffles the WHOLE seen table on
+the key, the same `Exchange hashpartitioning(url_norm)` the plain exact
+anti-join pays, and the probe adds two exchanges of its own (candidate
+keys and shards, by bucket). Removing the seen-side shuffle takes
+storage-level bucketing (plans/bucketed_seen.py), not this filter.
 """
 
 from __future__ import annotations
@@ -21,7 +27,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
+
+_SHARD_DDL = "bucket int, bitmap binary, bits int, k int"
 
 
 def _num_bits(capacity: int, fpp: float) -> int:
@@ -43,111 +51,15 @@ def _positions(hashes: np.ndarray, k: int, bits: int) -> Iterator[np.ndarray]:
         yield ((h1 + np.uint64(i) * h2) % np.uint64(bits)).astype(np.int64)
 
 
-def build_bloom(
-    seen: DataFrame, key_col: str = "url_norm",
-    capacity: int = 1 << 20, fpp: float = 0.01,
-) -> tuple[bytes, int, int]:
-    """Distributed build: per-partition bitmaps, OR-reduced. Returns
-    (bitmap bytes, bits, k)."""
-    bits = _num_bits(capacity, fpp)
-    k = _num_hashes(bits, capacity)
-    hashed = seen.select(F.xxhash64(key_col).alias("h"))
-
-    def to_bitmap(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bm = np.zeros(bits // 8, dtype=np.uint8)
-        any_rows = False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            any_rows = True
-            hs = pdf["h"].to_numpy(dtype=np.int64)
-            for pos in _positions(hs, k, bits):
-                np.bitwise_or.at(bm, pos // 8, (1 << (pos % 8)).astype(np.uint8))
-        if any_rows:
-            yield pd.DataFrame({"bitmap": [bm.tobytes()]})
-
-    parts = hashed.mapInPandas(to_bitmap, "bitmap binary").collect()
-    out = np.zeros(bits // 8, dtype=np.uint8)
-    for row in parts:
-        out |= np.frombuffer(row["bitmap"], dtype=np.uint8)
-    return out.tobytes(), bits, k
-
-
-def bloom_partition(
-    candidates: DataFrame, bloom: tuple[bytes, int, int],
-    key_col: str = "url_norm",
-) -> DataFrame:
-    """Add ``bloom_positive`` column: False ⇒ definitely unseen (skip the
-    anti-join), True ⇒ maybe seen (route to exact anti-join)."""
-    bitmap_bytes, bits, k = bloom
-    spark = candidates.sparkSession
-    b = spark.sparkContext.broadcast(bitmap_bytes)
-
-    @F.pandas_udf("boolean")
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        bm = np.frombuffer(b.value, dtype=np.uint8)
-        for hs in it:
-            vals = hs.to_numpy(dtype=np.int64)
-            hit = np.ones(len(vals), dtype=bool)
-            for pos in _positions(vals, k, bits):
-                hit &= (bm[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0
-            yield pd.Series(hit)
-
-    return candidates.withColumn(
-        "bloom_positive", probe(F.xxhash64(key_col))
-    )
-
-
-def bloom_anti_join(
-    candidates: DataFrame, seen: DataFrame, bloom: tuple[bytes, int, int],
-    key_col: str = "url_norm",
-) -> DataFrame:
-    """Exact `candidates ∖ seen`, bloom-accelerated: only bloom-positive
-    rows pay the join shuffle; negatives pass straight through."""
-    tagged = bloom_partition(candidates, bloom, key_col)
-    negatives = tagged.filter(~F.col("bloom_positive")).drop("bloom_positive")
-    positives = (
-        tagged.filter(F.col("bloom_positive"))
-        .drop("bloom_positive")
-        .join(seen.select(key_col), key_col, "left_anti")
-    )
-    return negatives.unionByName(positives)
-
-
-# --- bucketed (truly partitioned) variant — the 10^10 form -------------------
-#
-# One broadcast bitmap stops working when the seen set outgrows driver
-# memory (10^10 URLs at 1% fpp ≈ 12 GB of bitmap). The north-rule form
-# shards the filter by key hash: bucket b owns bitmap_b covering only the
-# keys with pmod(xxhash64(key), B) == b. Build and probe are both
-# hash-partitioned on the bucket — no single machine ever holds more than
-# one shard, and the probe shuffle is the same partitioning the exact
-# anti-join needs anyway.
-
 def build_bucketed_bloom(
     seen: DataFrame, key_col: str = "url_norm", n_buckets: int = 64,
     capacity_per_bucket: int = 1 << 16, fpp: float = 0.01,
 ) -> DataFrame:
-    """(bucket, bitmap) table: one bloom shard per key-hash bucket."""
-    bits = _num_bits(capacity_per_bucket, fpp)
-    k = _num_hashes(bits, capacity_per_bucket)
-    hashed = seen.select(
-        F.xxhash64(key_col).alias("h"),
-        F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int").alias("bucket"),
-    )
-
-    def to_bitmap(pdf: pd.DataFrame) -> pd.DataFrame:
-        bm = np.zeros(bits // 8, dtype=np.uint8)
-        hs = pdf["h"].to_numpy(dtype=np.int64)
-        for pos in _positions(hs, k, bits):
-            np.bitwise_or.at(bm, pos // 8, (1 << (pos % 8)).astype(np.uint8))
-        return pd.DataFrame(
-            {"bucket": [int(pdf["bucket"].iloc[0])], "bitmap": [bm.tobytes()],
-             "bits": [bits], "k": [k]}
-        )
-
-    return hashed.groupBy("bucket").applyInPandas(
-        to_bitmap, "bucket int, bitmap binary, bits int, k int"
+    """(bucket, bitmap, bits, k) table: one bloom shard per key-hash
+    bucket — *seen* merged into an empty shard table."""
+    empty = seen.sparkSession.createDataFrame([], _SHARD_DDL)
+    return update_bucketed_bloom(
+        empty, seen, key_col, n_buckets, capacity_per_bucket, fpp
     )
 
 
@@ -155,14 +67,13 @@ def update_bucketed_bloom(
     blooms: DataFrame, new_seen: DataFrame, key_col: str = "url_norm",
     n_buckets: int = 64, capacity_per_bucket: int = 1 << 16, fpp: float = 0.01,
 ) -> DataFrame:
-    """Incrementally OR *new_seen*'s keys into the sharded filter — the
-    per-tier crawler update. Cogroups each shard with its bucket's new key
-    hashes on the executors (no driver-side bitmap ever exists, unlike the
-    broadcast bloom's driver merge): existing shards keep their (bits, k)
-    sizing; buckets appearing for the first time get a fresh shard at the
-    default sizing. Overfilling a shard only raises its fp rate — the
-    filter routes rows, it never decides membership (correctness contract
-    unchanged)."""
+    """OR *new_seen*'s keys into the sharded filter — the build and the
+    per-tier crawler update. Cogroups each shard with its bucket's new
+    key hashes on the executors (no driver-side bitmap ever exists):
+    existing shards keep their (bits, k) sizing; buckets appearing for
+    the first time get a fresh shard at the default sizing. Overfilling
+    a shard only raises its fp rate — the filter routes rows, it never
+    decides membership."""
     default_bits = _num_bits(capacity_per_bucket, fpp)
     default_k = _num_hashes(default_bits, capacity_per_bucket)
     hashed = new_seen.select(
@@ -189,147 +100,58 @@ def update_bucketed_bloom(
         )
 
     return blooms.groupBy("bucket").cogroup(hashed.groupBy("bucket")).applyInPandas(
-        merge, "bucket int, bitmap binary, bits int, k int"
+        merge, _SHARD_DDL
     )
-
-
-# Plan shapes _ensure_consistent_reread passes through unmaterialized:
-# narrow deterministic row-at-a-time ops (re-executing them twice over a
-# stable leaf is cheap AND consistent) over sources that re-read the same
-# rows on every consumption. Joins/aggregates/windows stay OUT of the
-# cheap set on purpose — re-executing those twice is the 128 s-vs-62 s
-# regression the materialize guard exists to prevent.
-_CHEAP_NODES = ("Project", "Filter", "SubqueryAlias", "GlobalLimit", "LocalLimit")
-_STABLE_LEAVES = (
-    "LogicalRDD",  # localCheckpoint
-    "LocalRelation",  # driver rows
-    "LogicalRelation",  # DataSource v1 file/table scan
-    "DataSourceV2Relation",
-    "DataSourceV2ScanRelation",
-    "Range",
-)
-
-
-def _plan_cheap_and_stable(node) -> bool:
-    """True iff every node under *node* is a deterministic narrow op
-    (`_CHEAP_NODES`) over stable re-readable leaves (`_STABLE_LEAVES`).
-    py4j walk over the ANALYZED plan — no job runs."""
-    kids = node.children()
-    name = node.nodeName()
-    if kids.isEmpty():
-        return any(name.startswith(leaf) for leaf in _STABLE_LEAVES)
-    if not any(name.startswith(c) for c in _CHEAP_NODES):
-        return False
-    exprs = node.expressions()
-    for i in range(exprs.size()):
-        if not exprs.apply(i).deterministic():
-            return False
-    return all(_plan_cheap_and_stable(kids.apply(i)) for i in range(kids.size()))
-
-
-def _ensure_consistent_reread(df: DataFrame) -> DataFrame:
-    """Return *df* as-is when re-consuming it twice is both consistent
-    and cheap: a single stable leaf (a materialized localCheckpoint
-    `LogicalRDD` or a file/table scan), or a chain of DETERMINISTIC
-    narrow ops (project/filter/limit) over such leaves — re-running a
-    pruned filter over a materialized frame costs less than copying the
-    whole frame into another MEMORY_AND_DISK checkpoint (ADVICE round-4:
-    the eager copy was pure overhead on heap-bound ≥5e7-row tiers).
-    Everything else — any non-deterministic expression, or an expensive
-    shape (join/agg/window) — is eagerly localCheckpoint-ed so the
-    scaffold's two consumptions observe one row set exactly once.
-    Plan inspection only — no job runs for the pass-through cases."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.children().isEmpty() or _plan_cheap_and_stable(plan):
-            return df
-    except Exception:  # pragma: no cover - py4j surface drift
-        pass
-    return df.localCheckpoint()
-
-
-def keys_only_sharded_anti_join(
-    candidates: DataFrame, seen: DataFrame, shards: DataFrame,
-    key_col: str, n_buckets: int, bucket_probe,
-) -> DataFrame:
-    """Shared keys-only scaffold for the sharded seen filters (bloom here,
-    cuckoo in plans/cuckoo.py): candidates' (key, bucket, hash) — nothing
-    else — are hash-partitioned by bucket and probed against their own
-    shard inside a COGROUP; the shard travels once per bucket, NEVER
-    attached to candidate rows (a join-then-groupBy formulation copies
-    the shard into every candidate row and shuffles gigabytes; measured
-    5× slower than the exact join at a 2·10^5-row tier). The probe emits
-    only the shard-POSITIVE keys; `really_seen` = positives ∩ seen
-    (small: the truly-seen candidates plus the fp rate's worth of unseen
-    ones), and the result is one JVM anti-join of the untouched candidate
-    rows against it. An earlier shape shipped EVERY candidate column
-    through the Arrow cogroup to tag rows in place — at a 25M-row tier
-    the full-width round-trip alone took 27 s and the tagged-split total
-    80.3 s vs 62.0 s for this shape on the same input (BASELINE.md
-    round-3 component table).
-
-    *bucket_probe(shard_pdf, hashes)* → boolean hit mask for one bucket:
-    `shard_pdf` is that bucket's single-row shard frame, `hashes` the
-    candidates' int64 xxhash64 values. A missing shard (bucket never
-    seen) short-circuits to no-positives before the callable runs.
-
-    NOTE: *candidates* is consumed TWICE (the probe and the final
-    anti-join), and Catalyst's column pruning makes the two subtrees
-    non-reusable — pass a MATERIALIZED frame (the crawler checkpoints
-    `eligible` before calling the sharded modes) or an expensive lazy
-    upstream will execute twice (a 25M-row dedup-agg measured 128 s lazy
-    vs 62 s checkpointed-first). A non-deterministic lazy upstream is
-    worse than slow: the two consumptions would observe DIFFERENT row
-    sets, silently dropping or duplicating frontier rows — so this
-    function GUARDS the contract: candidates whose analyzed plan is not
-    a leaf (localCheckpoint RDD / file scan — sources both consumptions
-    re-read consistently) are localCheckpoint-materialized here before
-    the fan-out. The guard is free for the crawler path (its frame is
-    already a checkpointed leaf)."""
-    from pyspark.sql import types as T
-
-    candidates = _ensure_consistent_reread(candidates)
-    keys = candidates.select(
-        F.col(key_col),
-        F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int").alias("__bucket"),
-        F.xxhash64(key_col).alias("__h"),
-    )
-
-    key_field = candidates.schema[key_col]
-
-    def probe(cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(cand_pdf) or not len(shard_pdf):
-            # no shard ⇒ bucket never seen ⇒ no positives
-            return pd.DataFrame({key_col: pd.Series([], dtype=object)})
-        hit = bucket_probe(shard_pdf, cand_pdf["__h"].to_numpy(dtype=np.int64))
-        return pd.DataFrame({key_col: cand_pdf[key_col][hit]})
-
-    positives = (
-        keys.groupBy("__bucket")
-        .cogroup(shards.withColumnRenamed("bucket", "__bucket").groupBy("__bucket"))
-        .applyInPandas(probe, T.StructType([key_field]))
-    )
-    really_seen = positives.join(seen.select(key_col), key_col, "leftsemi")
-    return candidates.join(really_seen, key_col, "left_anti")
 
 
 def bucketed_bloom_anti_join(
     candidates: DataFrame, seen: DataFrame, blooms: DataFrame,
     key_col: str = "url_norm", n_buckets: int = 64,
 ) -> DataFrame:
-    """Exact `candidates ∖ seen` via the sharded bloom filter — the
-    keys-only scaffold (see `keys_only_sharded_anti_join`, including the
-    materialized-candidates caveat) with the bitmap membership test as
-    the per-bucket kernel."""
+    """Exact `candidates ∖ seen` via the sharded bloom filter.
 
-    def bucket_probe(shard_pdf: pd.DataFrame, vals: np.ndarray) -> np.ndarray:
+    Only the candidates' (key, bucket, hash) go through the Arrow
+    cogroup, hash-partitioned by bucket and probed against their own
+    shard; the shard travels once per bucket, NEVER attached to
+    candidate rows (a join-then-groupBy formulation copies the shard
+    into every candidate row and shuffles gigabytes; measured 5× slower
+    than the exact join at a 2·10^5-row tier). The probe emits only the
+    shard-positive keys; `really_seen` = positives ⋉ seen (the truly-seen
+    candidates plus the fp rate's worth of unseen ones), and the result
+    is one JVM anti-join of the untouched candidate rows against it. An
+    earlier shape shipped EVERY candidate column through the cogroup to
+    tag rows in place — at a 25M-row tier the full-width round-trip
+    alone took 27 s, and the tagged-split total 80.3 s vs 62.0 s for
+    this shape (BASELINE.md round-3 component table).
+
+    *candidates* is consumed twice (the probe and the final anti-join),
+    and column pruning keeps the two subtrees from sharing an exchange,
+    so it is localCheckpoint-ed once here: an expensive lazy upstream (a
+    dedup aggregate, a Python UDF) runs once, and a non-deterministic
+    one shows both consumptions the same row set."""
+    candidates = candidates.localCheckpoint()
+    keys = candidates.select(
+        F.col(key_col),
+        F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int").alias("__bucket"),
+        F.xxhash64(key_col).alias("__h"),
+    )
+
+    def probe(cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
+        if not len(cand_pdf) or not len(shard_pdf):
+            # no shard ⇒ bucket never seen ⇒ no positives
+            return pd.DataFrame({key_col: pd.Series([], dtype=object)})
         bm = np.frombuffer(shard_pdf["bitmap"].iloc[0], dtype=np.uint8)
         bits, k = int(shard_pdf["bits"].iloc[0]), int(shard_pdf["k"].iloc[0])
+        vals = cand_pdf["__h"].to_numpy(dtype=np.int64)
         hit = np.ones(len(vals), dtype=bool)
         for pos in _positions(vals, k, bits):
             hit &= (bm[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0
-        return hit
+        return pd.DataFrame({key_col: cand_pdf[key_col][hit]})
 
-    return keys_only_sharded_anti_join(
-        candidates, seen, blooms, key_col, n_buckets, bucket_probe
+    positives = (
+        keys.groupBy("__bucket")
+        .cogroup(blooms.withColumnRenamed("bucket", "__bucket").groupBy("__bucket"))
+        .applyInPandas(probe, T.StructType([candidates.schema[key_col]]))
     )
+    really_seen = positives.join(seen.select(key_col), key_col, "leftsemi")
+    return candidates.join(really_seen, key_col, "left_anti")

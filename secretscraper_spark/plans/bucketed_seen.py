@@ -4,9 +4,9 @@ The crawler's D1 seen-check is ``frontier LEFT ANTI JOIN seen ON
 url_hash``. At bench scale the seen side is broadcast- or
 shuffle-cheap; at the north rule's 10^10-URL frontier the seen table is
 the BIGGEST table in the system and a plain anti-join re-shuffles it
-EVERY TIER. Probabilistic prefilters (plans/bloom.py, plans/cuckoo.py)
-cut the exact-join input, but the residual exact join still pays the
-shuffle on whatever survives.
+EVERY TIER. The sharded bloom prefilter (plans/bloom.py) does not help
+there: its exact check of the filter-positive keys still shuffles the
+whole seen table.
 
 Storage-level bucketing removes that shuffle structurally: persist
 ``seen`` bucketed by ``url_hash`` (Spark bucketed table: one file set

@@ -12,12 +12,10 @@ Re-expresses the reference's asyncio loop (crawler.py:175-217, 268-303,
 Scale design (10^10 frontier / 1000 executors):
 - fetch = hash join frontier⋈pages on xxhash64(url_norm); AQE picks
   shuffle-hash vs sort-merge; bucketed pages makes it co-located.
-- seen dedup: exact left_anti at test scale; seen_filter picks a prefilter
-  that routes definite-unseen rows around the join — 'broadcast-bloom'
-  (one driver bitmap, bench scale), 'bucketed-bloom' / 'cuckoo' (sharded
-  (bucket, filter) tables built/updated/probed on the executors — the
-  10^10 north-rule form; cuckoo adds delete() for TTL recrawl).
-  Correctness never depends on the filter.
+- seen dedup: exact left_anti by default; seen_filter='bucketed-bloom'
+  puts the sharded bloom filter in front of it (plans/bloom.py: (bucket,
+  bitmap) shards built/updated/probed on the executors — the north-rule
+  partitioned URL-seen). Correctness never depends on the filter.
 - discovery ordering: two-phase distributed rank (plans/ranking.py) — no
   single-task window anywhere.
 - budget cutoff: orderBy(seq).limit(k) = TakeOrderedAndProject.
@@ -50,7 +48,6 @@ from ..functions.extract import make_extract_udf
 from ..schemas import EDGES_SCHEMA, FRONTIER_SCHEMA, SECRETS_SCHEMA
 from . import bloom as bloommod
 from . import checkpoint as ckpt
-from . import cuckoo as cuckoomod
 from . import extraction
 from .politeness import (
     assign_fetch_schedule,
@@ -182,12 +179,11 @@ class SparkCrawler:
         pages: DataFrame,
         cfg: CrawlConfig | None = None,
         robots: DataFrame | None = None,
-        use_bloom: bool = False,
         checkpoint_dir: str | None = None,
         schedule_politeness: bool = True,
         fetch_mode: str = "join",
         page_fetch_fn=None,
-        seen_filter: str | None = None,
+        seen_filter: str = "exact",
         rules: dict[str, str] | None = None,
         link_rules: dict[str, str] | None = None,
         paced_virtual: bool = True,
@@ -213,17 +209,13 @@ class SparkCrawler:
         pages store stands in (test scale only; live deployments pass an
         HTTP fetcher).
 
-        seen_filter picks the URL-seen prefilter in front of the exact
-        anti-join (correctness NEVER depends on it — it only routes rows):
-        - 'exact' (default): plain left_anti against the seen table.
-        - 'broadcast-bloom': one driver-merged broadcast bitmap
-          (plans/bloom.build_bloom) — fast at bench scale, but the bitmap
-          lives on the driver: ~12 GB at the 10^10 north-rule scale.
-        - 'bucketed-bloom': sharded (bucket, bitmap) table, built/updated/
-          probed entirely on the executors — the 10^10 form.
-        - 'cuckoo': sharded cuckoo filter (plans/cuckoo.py) — same scale
-          shape as bucketed-bloom, plus delete() for TTL recrawl.
-        ``use_bloom=True`` is the legacy spelling of 'broadcast-bloom'.
+        seen_filter picks the URL-seen check:
+        - 'exact' (default): plain left_anti against the seen table — the
+          fastest form every measured tier size has shown.
+        - 'bucketed-bloom': the sharded bloom filter (plans/bloom.py) in
+          front of the exact anti-join, its (bucket, bitmap) table built/
+          updated/probed entirely on the executors. It only routes rows;
+          the result is identical to 'exact'.
 
         budget_mode picks how a tier's page-budget cut selects pages:
         - 'bfs' (default, reference parity crawler.py:190-191): first
@@ -281,9 +273,7 @@ class SparkCrawler:
         self.spark = spark
         self.cfg = cfg or CrawlConfig()
         self.robots = robots
-        if seen_filter is None:
-            seen_filter = "broadcast-bloom" if use_bloom else "exact"
-        assert seen_filter in ("exact", "broadcast-bloom", "bucketed-bloom", "cuckoo")
+        assert seen_filter in ("exact", "bucketed-bloom"), seen_filter
         self.seen_filter = seen_filter
         self.checkpoint_dir = checkpoint_dir
         self.schedule_politeness = schedule_politeness
@@ -685,70 +675,36 @@ class SparkCrawler:
             "host", n2.alias("n_fails"), qat2.alias("quarantined_at")
         ).filter((F.col("n_fails") > 0) | F.col("quarantined_at").isNotNull())
 
-    # -- seen-filter strategy (build / anti-join / per-tier update) -----------
+    # -- seen filter (build / anti-join / per-tier update); None = exact ----
 
     def _seen_build(self, seen: DataFrame):
+        if self.seen_filter == "exact":
+            return None
         cfg = self.cfg
-        if self.seen_filter == "broadcast-bloom":
-            return bloommod.build_bloom(
-                seen, capacity=cfg.bloom_capacity, fpp=cfg.bloom_fpp
-            )
-        if self.seen_filter == "bucketed-bloom":
-            return bloommod.build_bucketed_bloom(
-                seen, n_buckets=cfg.seen_n_buckets,
-                capacity_per_bucket=cfg.seen_bucket_capacity, fpp=cfg.bloom_fpp,
-            ).localCheckpoint()
-        if self.seen_filter == "cuckoo":
-            return cuckoomod.build_sharded_cuckoo(
-                seen, n_buckets=cfg.seen_n_buckets,
-                capacity_per_bucket=cfg.seen_bucket_capacity,
-            ).localCheckpoint()
-        return None  # exact
+        return bloommod.build_bucketed_bloom(
+            seen, n_buckets=cfg.seen_n_buckets,
+            capacity_per_bucket=cfg.seen_bucket_capacity, fpp=cfg.bloom_fpp,
+        ).localCheckpoint()
 
     def _seen_anti_join(self, eligible: DataFrame, seen: DataFrame, state):
-        cfg = self.cfg
-        if self.seen_filter == "broadcast-bloom":
-            return bloommod.bloom_anti_join(eligible, seen, state)
-        if self.seen_filter in ("bucketed-bloom", "cuckoo"):
-            # the sharded forms consume candidates twice (keys-only probe
-            # + final anti-join) and column pruning defeats exchange
-            # reuse — materialize the dedup-agg ONCE here (exact mode
-            # stays lazy: single consumption, checkpoint would be pure
-            # cost — measured 20.9 s lazy vs 34.3 s checkpoint alone at a
+        if state is None:
+            # stays lazy: one consumption, so a checkpoint would be pure
+            # cost (20.9 s lazy vs 34.3 s for the checkpoint alone at a
             # 25M-row tier, BASELINE.md round-3 component table)
-            eligible = eligible.localCheckpoint()
-            if self.seen_filter == "bucketed-bloom":
-                return bloommod.bucketed_bloom_anti_join(
-                    eligible, seen, state, n_buckets=cfg.seen_n_buckets
-                )
-            return cuckoomod.cuckoo_anti_join(
-                eligible, seen, state, n_buckets=cfg.seen_n_buckets
-            )
-        return eligible.join(seen, "url_norm", "left_anti")
+            return eligible.join(seen, "url_norm", "left_anti")
+        return bloommod.bucketed_bloom_anti_join(
+            eligible, seen, state, n_buckets=self.cfg.seen_n_buckets
+        )
 
     def _seen_update(self, state, new_frontier: DataFrame):
-        """Fold one tier's newly-enqueued URLs into the filter state. The
-        sharded forms merge on the executors (cogroup per bucket) — no
-        driver-side bitmap ever exists; localCheckpoint keeps the shard
-        table's lineage flat across tiers."""
+        """Fold one tier's newly-enqueued URLs into the shard table (a
+        cogroup per bucket on the executors); localCheckpoint keeps its
+        lineage flat across tiers."""
         cfg = self.cfg
-        if self.seen_filter == "broadcast-bloom":
-            extra = bloommod.build_bloom(
-                new_frontier, capacity=cfg.bloom_capacity, fpp=cfg.bloom_fpp
-            )
-            merged = bytes(a | b for a, b in zip(state[0], extra[0]))
-            return (merged, state[1], state[2])
-        if self.seen_filter == "bucketed-bloom":
-            return bloommod.update_bucketed_bloom(
-                state, new_frontier, n_buckets=cfg.seen_n_buckets,
-                capacity_per_bucket=cfg.seen_bucket_capacity, fpp=cfg.bloom_fpp,
-            ).localCheckpoint()
-        if self.seen_filter == "cuckoo":
-            return cuckoomod.update_sharded_cuckoo(
-                state, new_frontier, n_buckets=cfg.seen_n_buckets,
-                capacity_per_bucket=cfg.seen_bucket_capacity,
-            ).localCheckpoint()
-        return None
+        return bloommod.update_bucketed_bloom(
+            state, new_frontier, n_buckets=cfg.seen_n_buckets,
+            capacity_per_bucket=cfg.seen_bucket_capacity, fpp=cfg.bloom_fpp,
+        ).localCheckpoint()
 
     def _loop(self, st: dict) -> CrawlResult:
         cfg = self.cfg

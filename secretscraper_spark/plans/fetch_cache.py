@@ -11,10 +11,7 @@ Relational form: the cache is a DataFrame keyed by ``url_norm`` with a
 ``fetched_at`` stamp. A tier splits into cache hits (inner join against
 the fresh slice) and misses (left anti); only misses reach the fetch
 path, and the upsert keeps the newest row per URL. On an Iceberg
-deployment this is a MERGE INTO on the fetches table; expired keys can
-additionally be deleted from a persistent sharded cuckoo seen-filter
-(plans/cuckoo.delete_from_sharded_cuckoo) so they pass the prefilter and
-re-enqueue.
+deployment this is a MERGE INTO on the fetches table.
 """
 
 from __future__ import annotations
@@ -52,10 +49,3 @@ def upsert(cache: DataFrame, fetched_new: DataFrame, now: float) -> DataFrame:
         stamped
     )
 
-
-def expired_urls(cache: DataFrame, now: float, ttl: float) -> DataFrame:
-    """URLs whose cached fetch has expired — the delete-set for a
-    persistent seen filter (cuckoo ``delete_hashes``)."""
-    return cache.filter(
-        F.lit(float(now)) - F.col("fetched_at") > F.lit(float(ttl))
-    ).select("url_norm")

@@ -48,12 +48,11 @@ def main() -> None:
                          "written with (catalog re-registration needs it)")
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--out", default=None)
-    ap.add_argument("--use-bloom", action="store_true",
-                    help="legacy alias for --seen-filter broadcast-bloom")
-    ap.add_argument("--seen-filter", default=None,
-                    choices=["exact", "broadcast-bloom", "bucketed-bloom", "cuckoo"],
-                    help="URL-seen prefilter; bucketed-bloom/cuckoo are the "
-                         "sharded 10^10-scale forms (no driver-side bitmap)")
+    ap.add_argument("--seen-filter", default="exact",
+                    choices=["exact", "bucketed-bloom"],
+                    help="URL-seen check; bucketed-bloom puts the sharded "
+                         "bloom filter (no driver-side bitmap) in front of "
+                         "the exact anti-join")
     ap.add_argument("--seen-n-buckets", type=int, default=None,
                     help="sharded seen-filter shard count (default 64); size "
                          "n_buckets*capacity to the expected seen-set, e.g. "
@@ -168,7 +167,7 @@ def main() -> None:
     t0 = time.perf_counter()
     crawler = SparkCrawler(
         spark, pages, cfg, checkpoint_dir=args.checkpoint_dir,
-        use_bloom=args.use_bloom, seen_filter=args.seen_filter,
+        seen_filter=args.seen_filter,
         fold_outputs=args.fold_outputs,
         tier_chunk_rows=args.tier_chunk_rows, **crawler_kw,
     )

@@ -1,20 +1,11 @@
-"""S3 TTL fetch cache (reference crawler.py:388-403) + cuckoo delete —
-the recrawl path: within the TTL a URL is served from cache (no fetch
-call); after expiry it is fetched again, and a persistent cuckoo
-seen-filter can drop the expired keys so they re-enqueue."""
+"""S3 TTL fetch cache (reference crawler.py:388-403) — the recrawl path:
+within the TTL a URL is served from cache (no fetch call); after expiry
+it is fetched again."""
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import functions as F
-
 from secretscraper_spark.config import CrawlConfig
 from secretscraper_spark.plans.crawler import SparkCrawler
-from secretscraper_spark.plans.cuckoo import (
-    CuckooShard,
-    build_sharded_cuckoo,
-    delete_from_sharded_cuckoo,
-)
 from secretscraper_spark.schemas import PAGES_SCHEMA
 
 SITE = {
@@ -94,40 +85,3 @@ class TestTTLFetchCache:
         crawler.run(["http://h.test/"])
         assert len(log.read_text().splitlines()) == n_before
 
-
-class TestCuckooDelete:
-    def test_deleted_keys_pass_prefilter(self, spark):
-        keep = [f"http://s.test/k{i}" for i in range(60)]
-        drop = [f"http://s.test/d{i}" for i in range(60)]
-        df_keep = spark.createDataFrame([(u,) for u in keep], "url_norm string")
-        df_drop = spark.createDataFrame([(u,) for u in drop], "url_norm string")
-        shards = build_sharded_cuckoo(
-            df_keep.union(df_drop), n_buckets=4, capacity_per_bucket=256
-        ).localCheckpoint()
-        shards2 = delete_from_sharded_cuckoo(
-            shards, df_drop, n_buckets=4
-        ).localCheckpoint()
-
-        by_bucket = {r.bucket: r for r in shards2.collect()}
-        probes = (
-            df_keep.withColumn("is_keep", F.lit(True))
-            .union(df_drop.withColumn("is_keep", F.lit(False)))
-            .select(
-                "url_norm", "is_keep",
-                F.xxhash64("url_norm").alias("h"),
-                F.pmod(F.xxhash64("url_norm"), F.lit(4)).alias("b"),
-            )
-            .collect()
-        )
-        for r in probes:
-            shard = CuckooShard.from_bytes(
-                by_bucket[r.b].table, by_bucket[r.b].m
-            )
-            got = bool(
-                shard.contains_hashes(np.array([r.h], dtype=np.int64))[0]
-            )
-            # kept keys still maybe-seen; deleted keys definitely-unseen
-            if r.is_keep:
-                assert got, r.url_norm
-            else:
-                assert not got, r.url_norm

@@ -1,5 +1,5 @@
-"""Tests for politeness scheduling, bloom seen-filter, validate pass,
-checkpoint/resume, and robots gating."""
+"""Tests for politeness scheduling, the sharded bloom seen filter,
+validate pass, checkpoint/resume, and robots gating."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from secretscraper_spark.config import CrawlConfig
-from secretscraper_spark.plans import bloom as bloommod
 from secretscraper_spark.plans.crawler import SparkCrawler
 from secretscraper_spark.plans.politeness import (
     assign_fetch_schedule,
@@ -77,42 +76,17 @@ class TestPoliteness:
 
 
 class TestBloom:
-    def test_no_false_negatives(self, spark):
-        seen = spark.createDataFrame(
-            [(f"http://h.test/p/{i}",) for i in range(500)], "url_norm string"
-        )
-        bloom = bloommod.build_bloom(seen, capacity=1000, fpp=0.01)
-        tagged = bloommod.bloom_partition(seen, bloom).collect()
-        assert all(r.bloom_positive for r in tagged)  # every seen url flagged
-
-    def test_bloom_anti_join_exact(self, spark):
-        seen = spark.createDataFrame(
-            [(f"http://h.test/p/{i}",) for i in range(300)], "url_norm string"
-        )
-        cand = spark.createDataFrame(
-            [(f"http://h.test/p/{i}",) for i in range(200, 500)], "url_norm string"
-        )
-        bloom = bloommod.build_bloom(seen, capacity=1000, fpp=0.01)
-        got = {r.url_norm for r in bloommod.bloom_anti_join(cand, seen, bloom).collect()}
-        expected = {f"http://h.test/p/{i}" for i in range(300, 500)}
-        assert got == expected  # identical to plain left_anti
-
-    def test_crawl_with_bloom_matches_exact(self, spark):
-        pdf = generate_pages_pandas(200, 4)
-        site = site_from_pandas(pdf)
-        cfg = CrawlConfig(max_depth=2, max_page_num=0)
-        sim = simulate(site, seeds_for(4), cfg)
-        pages = spark.createDataFrame(pdf.drop(columns=["bytes"]))
-        res = SparkCrawler(spark, pages, cfg, use_bloom=True).run(seeds_for(4))
-        got = {r.url_norm: (r.depth, r.discovery_seq) for r in res.seen.collect()}
-        assert got == sim.seen
-
-    @pytest.mark.parametrize("mode", ["bucketed-bloom", "cuckoo"])
-    def test_crawl_with_sharded_seen_matches_exact(self, spark, mode):
-        """The 10^10-grade sharded seen-set modes wired into SparkCrawler
-        must reproduce the exact-anti-join crawl bit-for-bit (seen set with
-        depth+seq, edges, secrets) — the filter only routes rows. Tiny
-        per-shard capacity forces real incremental updates + overfill."""
+    @pytest.mark.parametrize(
+        "case", ["bucketed-bloom", "bucketed-bloom-chunked", "bucketed-bloom-resumed"]
+    )
+    def test_crawl_with_sharded_seen_matches_exact(self, spark, tmp_path, case):
+        """The sharded seen filter wired into SparkCrawler must reproduce
+        the exact-anti-join crawl bit-for-bit (seen set with depth+seq,
+        edges, secrets) — the filter only routes rows. Tiny per-shard
+        capacity forces real incremental updates + overfill. 'chunked'
+        splits tiers, carrying the filter state from chunk to chunk;
+        'resumed' rebuilds the filter from the round-0 snapshot's seen
+        table."""
         pdf = generate_pages_pandas(200, 4)
         site = site_from_pandas(pdf)
         cfg = CrawlConfig(
@@ -121,7 +95,20 @@ class TestBloom:
         )
         sim = simulate(site, seeds_for(4), cfg)
         pages = spark.createDataFrame(pdf.drop(columns=["bytes"]))
-        res = SparkCrawler(spark, pages, cfg, seen_filter=mode).run(seeds_for(4))
+        kw = {
+            "bucketed-bloom": {},
+            "bucketed-bloom-chunked": {"tier_chunk_rows": 8},
+            "bucketed-bloom-resumed": {"checkpoint_dir": str(tmp_path / "ck")},
+        }[case]
+
+        def crawler():
+            return SparkCrawler(spark, pages, cfg, seen_filter="bucketed-bloom", **kw)
+
+        res = crawler().run(seeds_for(4))
+        if "tier_chunk_rows" in kw:
+            assert any(t.get("chunk", 0) > 0 for t in res.tiers), res.tiers
+        if "checkpoint_dir" in kw:
+            res = crawler().resume(from_round=0)
         got = {r.url_norm: (r.depth, r.discovery_seq) for r in res.seen.collect()}
         assert got == sim.seen
         got_edges = {(r.parent_norm, r.child_norm, r.kind) for r in res.edges.collect()}
@@ -398,45 +385,40 @@ class TestBucketedBloom:
         assert len(out) == 1  # missing shard ⇒ definitely unseen
 
     def test_lazy_candidates_materialized_once(self, spark):
-        """keys_only_sharded_anti_join consumes candidates twice (probe +
-        anti-join); a lazy NON-DETERMINISTIC upstream would show the two
-        consumptions different row sets, silently dropping/duplicating
-        frontier rows (ADVICE round-3). Pin the in-function guard: a
-        non-leaf plan is localCheckpoint-materialized before the fan-out
-        (consistent output even with rand() upstream), while an
-        already-materialized leaf passes through untouched."""
+        """bucketed_bloom_anti_join consumes candidates twice (probe +
+        anti-join), so it must materialize them once first: a Python UDF
+        projected over an already-checkpointed frame runs once per row,
+        not once per consumption, and a non-deterministic upstream shows
+        both consumptions the same row set."""
         from pyspark.sql import functions as F
 
         from secretscraper_spark.plans import bloom as bl
 
         seen, cands = self._dfs(spark)
-        # leaf (LocalRelation / checkpointed RDD) → returned as-is
-        leaf = cands.localCheckpoint()
-        assert bl._ensure_consistent_reread(leaf) is leaf
-        # deterministic narrow chain over a stable leaf → pass-through
-        # (ADVICE round-4: re-running a cheap filter twice beats copying
-        # the frame into another MEMORY_AND_DISK checkpoint)
-        cheap = leaf.filter(F.length("url_norm") > 0).select("url_norm")
-        assert bl._ensure_consistent_reread(cheap) is cheap
-        # non-deterministic expression anywhere → materialized to a leaf
-        lazy = cands.filter(F.rand(3) < 2.0)
-        guarded = bl._ensure_consistent_reread(lazy)
-        assert guarded is not lazy
-        assert guarded._jdf.queryExecution().analyzed().children().isEmpty()
-        # expensive deterministic shape (aggregate) → still materialized,
-        # else the scaffold's two consumptions re-run it end-to-end twice
-        agg = cands.groupBy("url_norm").count().drop("count")
-        guarded_agg = bl._ensure_consistent_reread(agg)
-        assert guarded_agg is not agg
-        assert guarded_agg._jdf.queryExecution().analyzed().children().isEmpty()
-        # end-to-end: rand()-gated candidates stay internally consistent —
-        # output == exact anti-join of the SAME materialized row set
-        nondet = cands.filter(F.rand(7) < 2.0)  # always true, but nondet-flagged
         blooms = bl.build_bucketed_bloom(seen, n_buckets=8)
-        got = {r.url_norm for r in
-               bl.bucketed_bloom_anti_join(nondet, seen, blooms, n_buckets=8).collect()}
         expected = {r.url_norm for r in
                     cands.join(seen, "url_norm", "left_anti").collect()}
+
+        calls = spark.sparkContext.accumulator(0)
+
+        @F.udf("string")
+        def counted(u):
+            calls.add(1)
+            return u
+
+        projected = cands.localCheckpoint().select(
+            counted("url_norm").alias("url_norm")
+        )
+        got = {r.url_norm for r in
+               bl.bucketed_bloom_anti_join(projected, seen, blooms, n_buckets=8).collect()}
+        assert got == expected
+        assert calls.value == 400
+
+        # rand()-gated candidates stay internally consistent — output ==
+        # exact anti-join of the SAME materialized row set
+        nondet = cands.filter(F.rand(7) < 2.0)  # always true, but nondet-flagged
+        got = {r.url_norm for r in
+               bl.bucketed_bloom_anti_join(nondet, seen, blooms, n_buckets=8).collect()}
         assert got == expected
 
     def test_probe_ships_keys_only(self, spark):
@@ -450,101 +432,21 @@ class TestBucketedBloom:
         from pyspark.sql import functions as F
 
         from secretscraper_spark.plans import bloom as bl
-        from secretscraper_spark.plans import cuckoo as ck
 
         seen, cands = self._dfs(spark)
         wide = cands.withColumn("payload_col", F.repeat(F.lit("x"), 10))
-        for out in (
-            bl.bucketed_bloom_anti_join(
-                wide, seen, bl.build_bucketed_bloom(seen, n_buckets=8),
-                n_buckets=8,
-            ),
-            ck.cuckoo_anti_join(
-                wide, seen, ck.build_sharded_cuckoo(seen, n_buckets=8),
-                n_buckets=8,
-            ),
-        ):
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            probe_lines = [
-                ln for ln in plan.splitlines()
-                if "FlatMapCoGroupsInPandas" in ln
-            ]
-            assert probe_lines, plan
-            assert all("payload_col" not in ln for ln in probe_lines), plan
-            # and the payload still comes out the other side, via the
-            # JVM anti-join of the untouched candidate rows
-            assert "payload_col" in out.columns
-
-
-class TestCuckoo:
-    def test_shard_membership_and_delete(self):
-        import numpy as np
-
-        from secretscraper_spark.plans.cuckoo import CuckooShard
-
-        shard = CuckooShard(capacity=4096)
-        rng = np.random.default_rng(7)
-        keys = rng.integers(-(2**62), 2**62, size=2000, dtype=np.int64)
-        assert shard.insert_hashes(keys) == 0  # all fit at 95% target load
-        assert shard.contains_hashes(keys).all()  # no false negatives
-
-        other = rng.integers(-(2**62), 2**62, size=2000, dtype=np.int64)
-        fresh = other[~np.isin(other, keys)]
-        fp_rate = shard.contains_hashes(fresh).mean()
-        assert fp_rate < 0.05  # 16-bit fingerprints → tiny fp rate
-
-        # the bloom filter cannot do this: forget half the keys (TTL expiry)
-        assert shard.delete_hashes(keys[:1000]) == 1000
-        assert shard.contains_hashes(keys[1000:]).all()
-        assert shard.contains_hashes(keys[:1000]).mean() < 0.05
-
-    def test_sharded_anti_join_exact(self, spark):
-        from secretscraper_spark.plans import cuckoo as ck
-
-        seen = spark.createDataFrame(
-            [(f"http://h{i % 5}.test/p/{i}",) for i in range(0, 600, 2)],
-            "url_norm string",
+        out = bl.bucketed_bloom_anti_join(
+            wide, seen, bl.build_bucketed_bloom(seen, n_buckets=8), n_buckets=8,
         )
-        cands = spark.createDataFrame(
-            [(f"http://h{i % 5}.test/p/{i}",) for i in range(600)],
-            "url_norm string",
-        )
-        shards = ck.build_sharded_cuckoo(seen, n_buckets=8, capacity_per_bucket=1024)
-        assert shards.agg({"failed": "sum"}).first()[0] == 0
-        got = {r.url_norm for r in
-               ck.cuckoo_anti_join(cands, seen, shards, n_buckets=8).collect()}
-        expected = {r.url_norm for r in cands.join(seen, "url_norm", "left_anti").collect()}
-        assert got == expected
-        assert len(got) == 300
-
-    def test_failed_shard_routes_to_exact_join(self, spark):
-        """A shard reporting failed inserts is missing fingerprints, so its
-        negatives are untrustworthy — cuckoo_anti_join must route the whole
-        bucket through the exact anti-join (ADVICE r01). Simulated by
-        overwriting the failed count on a real shard table."""
-        from pyspark.sql import functions as F
-
-        from secretscraper_spark.plans import cuckoo as ck
-
-        seen = spark.createDataFrame(
-            [(f"http://h{i % 5}.test/p/{i}",) for i in range(0, 600, 2)],
-            "url_norm string",
-        )
-        cands = spark.createDataFrame(
-            [(f"http://h{i % 5}.test/p/{i}",) for i in range(600)],
-            "url_norm string",
-        )
-        # build the filter from only HALF the seen set (as if the other
-        # half's inserts failed) and stamp failed=1: a trusting filter
-        # would emit the missing half's candidates as definitely-unseen
-        half_seen = seen.limit(150)
-        shards = ck.build_sharded_cuckoo(
-            half_seen, n_buckets=8, capacity_per_bucket=1024
-        ).withColumn("failed", F.lit(1))
-        got = {r.url_norm for r in
-               ck.cuckoo_anti_join(cands, seen, shards, n_buckets=8).collect()}
-        expected = {r.url_norm for r in cands.join(seen, "url_norm", "left_anti").collect()}
-        assert got == expected  # exactness survives a lying filter
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        probe_lines = [
+            ln for ln in plan.splitlines() if "FlatMapCoGroupsInPandas" in ln
+        ]
+        assert probe_lines, plan
+        assert all("payload_col" not in ln for ln in probe_lines), plan
+        # and the payload still comes out the other side, via the JVM
+        # anti-join of the untouched candidate rows
+        assert "payload_col" in out.columns
 
 
 class TestDistributedSeedFrontier:
@@ -594,9 +496,8 @@ class TestShardedSeenExactnessAtScale:
         cand = seen.union(unseen).localCheckpoint()
         return seen, unseen, cand
 
-    def test_bloom_and_cuckoo_zero_false_negatives(self, spark):
+    def test_bloom_zero_false_negatives(self, spark):
         from secretscraper_spark.plans import bloom as bl
-        from secretscraper_spark.plans import cuckoo as ck
 
         old = spark.conf.get("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -612,14 +513,6 @@ class TestShardedSeenExactnessAtScale:
             out_b = bl.bucketed_bloom_anti_join(cand, seen, blooms, n_buckets=16)
             assert out_b.count() == 2000
             assert out_b.join(seen, "url_norm", "inner").count() == 0
-
-            shards = ck.update_sharded_cuckoo(
-                ck.build_sharded_cuckoo(half, n_buckets=16).localCheckpoint(),
-                rest, n_buckets=16,
-            ).localCheckpoint()
-            out_c = ck.cuckoo_anti_join(cand, seen, shards, n_buckets=16)
-            assert out_c.count() == 2000
-            assert out_c.join(seen, "url_norm", "inner").count() == 0
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", old)
 
