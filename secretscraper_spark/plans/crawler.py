@@ -23,15 +23,18 @@ Scale design (10^10 frontier / 1000 executors):
   tier makespan is recorded in the metrics, and the hot-host rate budget —
   not Spark — is the throughput floor it exposes.
 - per-tier localCheckpoint truncates lineage; checkpoint_dir writes
-  parquet round snapshots + a manifest (state, schemas, part-file
-  lineage from the parquet footers) for resume: one Spark job per table
-  per round, and re-reads run none (plans/checkpoint.py).
+  append-only parquet round snapshots + a manifest (state, schemas,
+  part-file lineage from the parquet footers) for resume: round d
+  writes tier d+1's frontier and tier d's extraction checkpoint (round 0
+  also the seeds), one Spark job each; seen, nodes, edges and secrets
+  are derived on read, and re-reads run no job (plans/checkpoint.py).
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -453,15 +456,20 @@ class SparkCrawler:
         t_seed = time.perf_counter()
         frontier = build_frontier().localCheckpoint()
         seen = frontier.select("url_norm", "depth", "discovery_seq").localCheckpoint()
+        n_frontier = frontier.count()
         st = {
             "frontier": frontier,
+            # counted once here, handed on to _loop (see _tier)
+            "n_frontier": n_frontier,
             "seen": seen,
+            # the depth-0 seen rows, round 0's `seeds` snapshot table
+            "seeds": seen,
             "nodes": self._empty(NODES_DDL),
             "edges": self._empty(EDGES_SCHEMA),
             "secrets": self._empty(SECRETS_SCHEMA),
             "depth": 0,
             "total_page": 0,
-            "next_seq": frontier.count(),
+            "next_seq": n_frontier,
             "tiers": [],
             "host_fails": self._empty(QUARANTINE_DDL),
             "host_delays": self._empty(DELAYS_DDL),
@@ -493,7 +501,7 @@ class SparkCrawler:
             "host_delays": tables.get(
                 "host_delays", self._empty(DELAYS_DDL)
             ),
-            # seen starts as one parquet leaf (see _snapshot's reset)
+            # seen starts as parquet scans (see _snapshot's reset)
             "seen_segments": 1,
         }
         return self._loop(st)
@@ -717,7 +725,9 @@ class SparkCrawler:
                 break
             if cfg.max_page_num > 0 and st["total_page"] >= cfg.max_page_num:
                 break
-            n_frontier = st["frontier"].count()
+            n_frontier = st.pop("n_frontier", None)
+            if n_frontier is None:
+                n_frontier = st["frontier"].count()
             if n_frontier == 0:
                 break
             if (
@@ -726,6 +736,7 @@ class SparkCrawler:
             ):
                 seen_state = self._chunked_tier(st, seen_state, n_frontier)
             else:
+                st["n_frontier"] = n_frontier
                 seen_state = self._tier(st, seen_state)
             if self.checkpoint_dir:
                 self._snapshot(st)
@@ -863,7 +874,11 @@ class SparkCrawler:
             _last = now
 
         frontier = st["frontier"]
-        n_frontier = frontier.count()
+        # _loop hands the monolithic tier its count; a chunk, or a caller
+        # that enters _tier directly, counts here
+        n_frontier = st.pop("n_frontier", None)
+        if n_frontier is None:
+            n_frontier = frontier.count()
         mark("count_frontier")
 
         # C5 robots gate (north-rule addition; excluded like evade: no fetch,
@@ -977,6 +992,10 @@ class SparkCrawler:
         combined = self._scale_ckpt(
             extraction.extract_combined(fetched, self._extract_udf)
         )
+        if self.checkpoint_dir and not self.fold_outputs:
+            # this tier's `extracted` snapshot delta (one per chunk until
+            # _snapshot unions, writes and drops them)
+            st.setdefault("extracted", []).append(combined)
         mark("extract")
 
         # shared per-tier frame for the breaker and AIMD folds:
@@ -1232,31 +1251,33 @@ class SparkCrawler:
         }
 
     def _snapshot(self, st: dict) -> None:
+        """Append round ``depth``: tier depth+1's frontier, the tier's
+        extraction checkpoint (retained mode), round 0's seeds and the
+        host-state tables; then point st at the parquet-backed logical
+        tables (plans/checkpoint.py). No Spark job outside the writes."""
         state = ckpt.CrawlState(
             depth=st["depth"],
             total_page=st["total_page"],
             next_seq=st["next_seq"],
             tiers=st["tiers"],
         )
-        tables = {
-            "frontier": st["frontier"],
-            "seen": st["seen"],
-            "nodes": st["nodes"],
-            "edges": st["edges"],
-            "secrets": st["secrets"],
-        }
+        tables = {"frontier": st["frontier"]}
+        if st["depth"] == 0:
+            tables["seeds"] = st["seeds"]
+        extracted = st.pop("extracted", None)
+        if extracted is not None:
+            tables["extracted"] = reduce(DataFrame.unionByName, extracted)
         if self.quarantine_fails is not None:
             tables["host_fails"] = st["host_fails"]
         if self.adaptive_delay:
             tables["host_delays"] = st["host_delays"]
         lineage = ckpt.write_round(self.checkpoint_dir, state, tables)
         st["tiers"][-1]["lineage"] = {k: len(v) for k, v in lineage.items()}
-        # re-read snapshots so downstream lineage points at parquet, not RAM;
-        # the known schema spares an inference job per table
-        base = ckpt._round_dir(self.checkpoint_dir, st["depth"])
-        for name, df in tables.items():
-            st[name] = self.spark.read.schema(df.schema).parquet(f"{base}/{name}")
-        # seen is now a single parquet leaf — restart the union-of-segments
+        # re-read the snapshot so downstream lineage points at parquet,
+        # not RAM; the stored schemas spare an inference job per table
+        _, logical = ckpt.read_round(self.spark, self.checkpoint_dir, st["depth"])
+        st.update(logical)
+        # seen is now two parquet scans — restart the union-of-segments
         # count so the 16-tier flatten doesn't fire early and pay an extra
         # full-table localCheckpoint copy the snapshot already provides
         st["seen_segments"] = 1

@@ -230,11 +230,14 @@ class TestCheckpointResume:
         assert resumed.total_page == full.total_page
 
     def test_lineage_recorded(self, spark, tmp_path):
-        """The snapshot contract: each table's lineage (its non-empty part
-        files) sums to the table's rows, read_round returns the written
-        schemas (and refuses a manifest without them), and neither
-        read_round nor the crawler's post-snapshot re-reads start a Spark
-        job (no schema inference, no lineage aggregation)."""
+        """The snapshot contract: round d stores only its deltas — tier
+        d+1's frontier and tier d's extraction checkpoint, plus the seeds
+        at round 0 — each written by exactly one Spark job; each stored
+        table's lineage (its non-empty part files) sums to its rows and
+        its stored schema reads back as inferred; neither read_round nor
+        the crawler's post-snapshot re-read starts a Spark job (no schema
+        inference, no lineage aggregation); and the older formats — a
+        manifest without schemas, a round 0 without seeds — are refused."""
         import json, os
 
         from pyspark.sql import types as T
@@ -252,57 +255,158 @@ class TestCheckpointResume:
 
         crawler = SparkCrawler(spark, pages, CrawlConfig(max_depth=1), checkpoint_dir=ck)
         write_round, snapshot = ckpt.write_round, crawler._snapshot
+        write_jobs = []  # per snapshot: jobs inside write_round
         extra_jobs = []  # per snapshot: jobs started outside write_round
 
         def counted_write(*args):
             before = jobs()
             out = write_round(*args)
-            extra_jobs[-1] -= len(jobs() - before)
+            write_jobs.append(len(jobs() - before))
             return out
 
         def counted_snapshot(st):
             before = jobs()
-            extra_jobs.append(0)
             snapshot(st)
-            extra_jobs[-1] += len(jobs() - before)
+            extra_jobs.append(len(jobs() - before) - write_jobs[-1])
 
         sc.setJobGroup(group, group)
         ckpt.write_round, crawler._snapshot = counted_write, counted_snapshot
         try:
-            crawler.run(seeds_for(4))
+            res = crawler.run(seeds_for(4))
             before = jobs()
             rounds = {d: ckpt.read_round(spark, ck, d) for d in (0, 1)}
             read_jobs = len(jobs() - before)
         finally:
             ckpt.write_round = write_round
             sc.setLocalProperty("spark.jobGroup.id", None)
+        assert write_jobs == [3, 2]  # one job per table written
         assert extra_jobs == [0, 0]
         assert read_jobs == 0
 
+        stored = {0: {"seeds", "frontier", "extracted"}, 1: {"frontier", "extracted"}}
         for d, (state, tables) in rounds.items():
             assert state.depth == d
+            assert set(tables) == {"frontier", "seen", "nodes", "edges", "secrets"}
             rd = os.path.join(ck, f"round={d}")
             with open(os.path.join(rd, "manifest.json")) as f:
                 manifest = json.load(f)
-            assert set(tables) == set(manifest["lineage"]) == set(manifest["schemas"])
-            for name, df in tables.items():
-                inferred = spark.read.parquet(os.path.join(rd, name))
-                assert df.schema == inferred.schema, (d, name)
+            assert set(manifest["lineage"]) == set(manifest["schemas"]) == stored[d]
+            for name, schema in manifest["schemas"].items():
+                path = os.path.join(rd, name)
+                written = T.StructType.fromJson(json.loads(schema))
+                df = spark.read.schema(written).parquet(path)
                 # file sources read every column as nullable
-                written = T.StructType.fromJson(json.loads(manifest["schemas"][name]))
+                assert df.schema == spark.read.parquet(path).schema, (d, name)
                 assert df.schema.simpleString() == written.simpleString(), (d, name)
                 lineage = manifest["lineage"][name]
                 assert all(p["rows"] > 0 for p in lineage), (d, name)
                 assert sum(p["rows"] for p in lineage) == df.count(), (d, name)
-        assert sum(p["rows"] for p in manifest["lineage"]["seen"]) > 0
+            assert tables["frontier"].schema == spark.read.parquet(
+                os.path.join(rd, "frontier")
+            ).schema
+        assert sum(p["rows"] for p in manifest["lineage"]["extracted"]) > 0
+        # the last round's logical tables are the crawl's result
+        assert rounds[1][1]["seen"].count() == res.seen.count()
+        assert rounds[1][1]["nodes"].count() == res.nodes.count()
 
-        # a manifest without schemas (the older format) is refused, never
-        # read by inference
+        # a manifest without schemas is refused, never read by inference
         del manifest["schemas"]
         with open(os.path.join(rd, "manifest.json"), "w") as f:
             json.dump(manifest, f)
         with pytest.raises(AssertionError, match="schemas"):
             ckpt.read_round(spark, ck, 1)
+        # so is a round 0 without seeds: the layout that rewrote every
+        # table each round
+        p0 = os.path.join(ck, "round=0", "manifest.json")
+        with open(p0) as f:
+            manifest = json.load(f)
+        del manifest["schemas"]["seeds"]
+        with open(p0, "w") as f:
+            json.dump(manifest, f)
+        with pytest.raises(AssertionError, match="seeds"):
+            ckpt.read_round(spark, ck, 0)
+
+    def test_deltas_store_each_row_once(self, spark, tmp_path):
+        """A 4-tier retained crawl: the rounds' extracted deltas hold
+        every node once, seeds + frontier deltas every seen row once,
+        round d stores tier d's rows (not running totals), and resuming
+        from every round reproduces the uninterrupted run: seen with
+        depth/seq, nodes, edges, secrets and total_page."""
+        import json, os
+
+        pdf = generate_pages_pandas(200, 4)
+        pages = spark.createDataFrame(pdf.drop(columns=["bytes"]))
+        cfg = CrawlConfig(max_depth=3, max_page_num=0)
+        ck = str(tmp_path / "ck4")
+
+        def crawler():
+            return SparkCrawler(spark, pages, cfg, checkpoint_dir=ck)
+
+        def outputs(res):
+            return (
+                {r.url_norm: (r.depth, r.discovery_seq) for r in res.seen.collect()},
+                {tuple(r) for r in res.nodes.collect()},
+                {tuple(r) for r in res.edges.collect()},
+                {tuple(r) for r in res.secrets.collect()},
+                res.total_page,
+            )
+
+        full = crawler().run(seeds_for(4))
+        # materialized before resume() rewrites the rounds it reads
+        want = outputs(full)
+        seen, nodes = want[0], want[1]
+        assert [t["depth"] for t in full.tiers] == [0, 1, 2, 3]
+
+        def rows(manifest, name):
+            return sum(p["rows"] for p in manifest["lineage"].get(name, []))
+
+        manifests = []
+        for d in range(4):
+            with open(os.path.join(ck, f"round={d}", "manifest.json")) as f:
+                manifests.append(json.load(f))
+        for d, (m, tier) in enumerate(zip(manifests, full.tiers)):
+            assert set(m["lineage"]) == {"frontier", "extracted"} | (
+                {"seeds"} if d == 0 else set()
+            )
+            assert rows(m, "frontier") == tier["enqueued"]
+            # tier d's fetched pages: its processed rows less store misses
+            assert rows(m, "extracted") == sum(1 for n in nodes if n[7] == d)
+            assert 0 < rows(m, "extracted") <= tier["processed"]
+        assert sum(rows(m, "extracted") for m in manifests) == len(nodes)
+        assert rows(manifests[0], "seeds") + sum(
+            rows(m, "frontier") for m in manifests
+        ) == len(seen)
+        assert sum(t["enqueued"] > 0 for t in full.tiers) >= 2
+
+        for r in (0, 1, 2):
+            assert outputs(crawler().resume(from_round=r)) == want, r
+
+    def test_fold_checkpoint_stores_no_extraction(self, spark, tmp_path):
+        """fold_outputs retains no outputs, so its rounds store only the
+        frontier (and round 0's seeds), and a resume still reproduces the
+        run's fold digests."""
+        import json, os
+
+        pdf = generate_pages_pandas(200, 4)
+        pages = spark.createDataFrame(pdf.drop(columns=["bytes"]))
+        cfg = CrawlConfig(max_depth=2, max_page_num=0)
+        ck = str(tmp_path / "ck_fold")
+
+        def crawler():
+            return SparkCrawler(spark, pages, cfg, fold_outputs=True, checkpoint_dir=ck)
+
+        full = crawler().run(seeds_for(4))
+        for d in range(3):
+            rd = os.path.join(ck, f"round={d}")
+            with open(os.path.join(rd, "manifest.json")) as f:
+                manifest = json.load(f)
+            assert set(manifest["schemas"]) == {"frontier"} | (
+                {"seeds"} if d == 0 else set()
+            )
+            assert not os.path.exists(os.path.join(rd, "extracted"))
+        resumed = crawler().resume(from_round=0)
+        assert resumed.folded == full.folded
+        assert resumed.total_page == full.total_page
 
 
 class TestPacedFetch:
@@ -981,6 +1085,45 @@ class TestSyntheticFetch:
         assert resumed.folded == full_folded
         assert resumed.total_page == full_total
         assert digest(resumed.seen) == full_seen_digest
+
+    def test_tier_chunking_retained_resume_parity(self, spark, tmp_path):
+        """Chunked tiers × checkpoint-resume with outputs retained: each
+        tier stores ONE extracted delta, the union of its chunks'
+        extraction checkpoints, and resuming from round 0 (its next tier
+        chunked again) reproduces refsim's seen (depth/seq), edges and
+        secrets."""
+        import json, os
+
+        pdf = generate_pages_pandas(200, 4)
+        site = site_from_pandas(pdf)
+        cfg = CrawlConfig(max_depth=2, max_page_num=0)
+        sim = simulate(site, seeds_for(4), cfg)
+        pages = spark.createDataFrame(pdf.drop(columns=["bytes"]))
+        ck = str(tmp_path / "ck_retained_chunked")
+
+        def crawler():
+            return SparkCrawler(
+                spark, pages, cfg, tier_chunk_rows=8, checkpoint_dir=ck
+            )
+
+        full = crawler().run(seeds_for(4))
+        assert any(t["depth"] == 1 and t.get("chunk", 0) > 0 for t in full.tiers)
+        n_nodes = full.nodes.count()
+        stored = 0
+        for d in range(3):
+            rd = os.path.join(ck, f"round={d}")
+            with open(os.path.join(rd, "manifest.json")) as f:
+                lineage = json.load(f)["lineage"]["extracted"]
+            stored += sum(p["rows"] for p in lineage)
+        assert stored == n_nodes
+
+        res = crawler().resume(from_round=0)
+        got = {r.url_norm: (r.depth, r.discovery_seq) for r in res.seen.collect()}
+        assert got == sim.seen
+        got_edges = {(r.parent_norm, r.child_norm, r.kind) for r in res.edges.collect()}
+        assert got_edges == sim.edges
+        got_secrets = {(r.url_norm, r.rule_name, r.match) for r in res.secrets.collect()}
+        assert got_secrets == sim.secrets
 
     def test_fold_digest_collision_parity(self, spark):
         """ADVICE round-4: the fold's edge digest must stay bit-equal to
