@@ -119,8 +119,6 @@ class ExternalEntry:
 @click.option("--pages", help="Pages-store parquet (fetch-join mode)",
               type=click.STRING)
 @click.option("--master", help="Spark master", type=click.STRING)
-@click.option("--seen-filter", help="URL-seen check",
-              type=click.Choice(["exact", "bucketed-bloom"]))
 @click.option("--budget-mode", help="Tier page-budget cut",
               type=click.Choice(["bfs", "host-proportional"]))
 @click.option("--trap-cap", help="URL-explosion enqueue gate: stop enqueuing "

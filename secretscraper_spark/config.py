@@ -114,13 +114,6 @@ class CrawlConfig:
     respect_robots: bool = False
     # engine knobs
     shuffle_partitions: int = 32
-    # sharded bloom seen filter (seen_filter='bucketed-bloom'): false-
-    # positive rate, number of key-hash shards and per-shard capacity.
-    # At the 10^10 north-rule scale these become ~10^4 buckets × ~10^6
-    # keys; no single machine ever holds more than one shard either way.
-    bloom_fpp: float = 0.01
-    seen_n_buckets: int = 64
-    seen_bucket_capacity: int = 1 << 16
     # fetch-join strategy: broadcast the frontier tier while it fits an
     # executor (deterministic small-tier plan; no pages-side shuffle);
     # beyond this the join takes the shuffle-hash path (AQE)

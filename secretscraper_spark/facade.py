@@ -231,7 +231,6 @@ class CrawlerFacade:
             rules=loaded_rules_from(settings),
             link_rules=url_finder_rules_from(settings),
             checkpoint_dir=custom.get("checkpoint_dir"),
-            seen_filter=custom.get("seen_filter") or "exact",
             budget_mode=custom.get("budget_mode") or "bfs",
             trap_cap=custom.get("trap_cap"),
             quarantine_fails=custom.get("quarantine_fails"),

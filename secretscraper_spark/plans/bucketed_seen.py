@@ -4,9 +4,10 @@ The crawler's D1 seen-check is ``frontier LEFT ANTI JOIN seen ON
 url_hash``. At bench scale the seen side is broadcast- or
 shuffle-cheap; at the north rule's 10^10-URL frontier the seen table is
 the BIGGEST table in the system and a plain anti-join re-shuffles it
-EVERY TIER. The sharded bloom prefilter (plans/bloom.py) does not help
-there: its exact check of the filter-positive keys still shuffles the
-whole seen table.
+EVERY TIER. A probabilistic prefilter does not help there: a sharded
+bloom filter was tried and deleted, because its exact check of the
+filter-positive keys still shuffled the whole seen table, and it
+measured slower than the plain anti-join (BASELINE.md round 3).
 
 Storage-level bucketing removes that shuffle structurally: persist
 ``seen`` bucketed by ``url_hash`` (Spark bucketed table: one file set

@@ -12,10 +12,10 @@ Re-expresses the reference's asyncio loop (crawler.py:175-217, 268-303,
 Scale design (10^10 frontier / 1000 executors):
 - fetch = hash join frontier⋈pages on xxhash64(url_norm); AQE picks
   shuffle-hash vs sort-merge; bucketed pages makes it co-located.
-- seen dedup: exact left_anti by default; seen_filter='bucketed-bloom'
-  puts the sharded bloom filter in front of it (plans/bloom.py: (bucket,
-  bitmap) shards built/updated/probed on the executors — the north-rule
-  partitioned URL-seen). Correctness never depends on the filter.
+- seen dedup: one lazy exact left_anti join of the tier's children
+  against the seen table. At 10^10 the seen-side shuffle goes away with
+  storage-level bucketing (plans/bucketed_seen.py), not with a
+  probabilistic prefilter.
 - discovery ordering: two-phase distributed rank (plans/ranking.py) — no
   single-task window anywhere.
 - budget cutoff: orderBy(seq).limit(k) = TakeOrderedAndProject.
@@ -49,7 +49,6 @@ from ..functions.exprs import (
 )
 from ..functions.extract import make_extract_udf
 from ..schemas import EDGES_SCHEMA, FRONTIER_SCHEMA, SECRETS_SCHEMA
-from . import bloom as bloommod
 from . import checkpoint as ckpt
 from . import extraction
 from .politeness import (
@@ -183,10 +182,8 @@ class SparkCrawler:
         cfg: CrawlConfig | None = None,
         robots: DataFrame | None = None,
         checkpoint_dir: str | None = None,
-        schedule_politeness: bool = True,
         fetch_mode: str = "join",
         page_fetch_fn=None,
-        seen_filter: str = "exact",
         rules: dict[str, str] | None = None,
         link_rules: dict[str, str] | None = None,
         paced_virtual: bool = True,
@@ -211,14 +208,6 @@ class SparkCrawler:
         When page_fetch_fn is None in paced mode, a broadcast lookup of the
         pages store stands in (test scale only; live deployments pass an
         HTTP fetcher).
-
-        seen_filter picks the URL-seen check:
-        - 'exact' (default): plain left_anti against the seen table — the
-          fastest form every measured tier size has shown.
-        - 'bucketed-bloom': the sharded bloom filter (plans/bloom.py) in
-          front of the exact anti-join, its (bucket, bitmap) table built/
-          updated/probed entirely on the executors. It only routes rows;
-          the result is identical to 'exact'.
 
         budget_mode picks how a tier's page-budget cut selects pages:
         - 'bfs' (default, reference parity crawler.py:190-191): first
@@ -276,10 +265,7 @@ class SparkCrawler:
         self.spark = spark
         self.cfg = cfg or CrawlConfig()
         self.robots = robots
-        assert seen_filter in ("exact", "bucketed-bloom"), seen_filter
-        self.seen_filter = seen_filter
         self.checkpoint_dir = checkpoint_dir
-        self.schedule_politeness = schedule_politeness
         assert fetch_mode in ("join", "paced", "mapped")
         self.fetch_mode = fetch_mode
         # fetch_mode='mapped': fetch is a caller-supplied DataFrame
@@ -683,43 +669,21 @@ class SparkCrawler:
             "host", n2.alias("n_fails"), qat2.alias("quarantined_at")
         ).filter((F.col("n_fails") > 0) | F.col("quarantined_at").isNotNull())
 
-    # -- seen filter (build / anti-join / per-tier update); None = exact ----
+    # -- URL-seen check: the lazy exact anti-join ---------------------------
 
-    def _seen_build(self, seen: DataFrame):
-        if self.seen_filter == "exact":
-            return None
-        cfg = self.cfg
-        return bloommod.build_bucketed_bloom(
-            seen, n_buckets=cfg.seen_n_buckets,
-            capacity_per_bucket=cfg.seen_bucket_capacity, fpp=cfg.bloom_fpp,
-        ).localCheckpoint()
+    def _seen_build(self, seen: DataFrame) -> None:
+        # no seen-side state to build; kept for perfbench/crawl.py:_replay
+        return None
 
     def _seen_anti_join(self, eligible: DataFrame, seen: DataFrame, state):
-        if state is None:
-            # stays lazy: one consumption, so a checkpoint would be pure
-            # cost (20.9 s lazy vs 34.3 s for the checkpoint alone at a
-            # 25M-row tier, BASELINE.md round-3 component table)
-            return eligible.join(seen, "url_norm", "left_anti")
-        return bloommod.bucketed_bloom_anti_join(
-            eligible, seen, state, n_buckets=self.cfg.seen_n_buckets
-        )
-
-    def _seen_update(self, state, new_frontier: DataFrame):
-        """Fold one tier's newly-enqueued URLs into the shard table (a
-        cogroup per bucket on the executors); localCheckpoint keeps its
-        lineage flat across tiers."""
-        cfg = self.cfg
-        return bloommod.update_bucketed_bloom(
-            state, new_frontier, n_buckets=cfg.seen_n_buckets,
-            capacity_per_bucket=cfg.seen_bucket_capacity, fpp=cfg.bloom_fpp,
-        ).localCheckpoint()
+        # state: unused, kept for perfbench/crawl.py:_replay's wrapper.
+        # Stays lazy: one consumption, so a checkpoint would be pure cost
+        # (20.9 s lazy vs 34.3 s for the checkpoint alone at a 25M-row
+        # tier, BASELINE.md round-3 component table)
+        return eligible.join(seen, "url_norm", "left_anti")
 
     def _loop(self, st: dict) -> CrawlResult:
         cfg = self.cfg
-        t_sb = time.perf_counter()
-        seen_state = self._seen_build(st["seen"])
-        overhead = st.get("overhead", {})
-        overhead["seen_build_sec"] = round(time.perf_counter() - t_sb, 3)
         while True:
             if cfg.max_depth > 0 and st["depth"] > cfg.max_depth:
                 break
@@ -734,10 +698,10 @@ class SparkCrawler:
                 self.tier_chunk_rows is not None
                 and n_frontier > self.tier_chunk_rows
             ):
-                seen_state = self._chunked_tier(st, seen_state, n_frontier)
+                self._chunked_tier(st, n_frontier)
             else:
                 st["n_frontier"] = n_frontier
-                seen_state = self._tier(st, seen_state)
+                self._tier(st)
             if self.checkpoint_dir:
                 self._snapshot(st)
             if (
@@ -784,7 +748,7 @@ class SparkCrawler:
             ).distinct(),
             total_page=st["total_page"],
             tiers=st["tiers"],
-            overhead=overhead,
+            overhead=st.get("overhead", {}),
             host_delays=st["host_delays"] if self.adaptive_delay else None,
             host_fails=(
                 st["host_fails"] if self.quarantine_fails is not None else None
@@ -792,7 +756,7 @@ class SparkCrawler:
             folded=folded,
         )
 
-    def _chunked_tier(self, st: dict, seen_state, n_frontier: int) -> object:
+    def _chunked_tier(self, st: dict, n_frontier: int) -> None:
         """Process one BFS tier as seq-contiguous chunks of
         ≤``tier_chunk_rows`` rows — the heap mitigation for tiers whose
         extraction checkpoint exceeds a single JVM's storage memory.
@@ -842,7 +806,7 @@ class SparkCrawler:
                 (F.col("discovery_seq") >= c_lo)
                 & (F.col("discovery_seq") < min(c_lo + step, hi + 1))
             )
-            seen_state = self._tier(st, seen_state)
+            self._tier(st)
             st["tiers"][-1]["chunk"] = ci
             segments.append(st["frontier"])  # this chunk's new_frontier
             if self.fold_outputs:
@@ -860,9 +824,9 @@ class SparkCrawler:
         # each segment is already a checkpointed leaf, so the union is a
         # flat read — same shape as the seen-segments accumulation
         st["frontier"] = nf
-        return seen_state
 
-    def _tier(self, st: dict, seen_state) -> object:
+    def _tier(self, st: dict, state=None) -> None:
+        # state: unused, kept for perfbench/crawl.py:_replay's call
         cfg, depth = self.cfg, st["depth"]
         phase_t: dict[str, float] = {}
         _last = time.perf_counter()
@@ -939,7 +903,7 @@ class SparkCrawler:
         # C1/C2 politeness schedule (virtual time; metrics only in sandbox —
         # a real-network deployment fetches per (host, slot) group)
         makespan = None
-        if self.schedule_politeness and n_processed:
+        if n_processed:
             sched_dim = self.robots
             if self.adaptive_delay:
                 # merge the adapted per-host delays with robots
@@ -1142,7 +1106,7 @@ class SparkCrawler:
                 eligible = traps.prune_trapped(
                     eligible, hot, prefix_depth=self.trap_prefix_depth
                 )
-            new_nodes = self._seen_anti_join(eligible, st["seen"], seen_state)
+            new_nodes = self._seen_anti_join(eligible, st["seen"], None)
             # ranking materializes + counts its input anyway; reuse that
             # count as n_new (rank preserves rows) — one job less per tier
             ranked, n_new = assign_global_seq_with_count(
@@ -1176,8 +1140,6 @@ class SparkCrawler:
                 st["seen"] = st["seen"].localCheckpoint()
                 st["seen_segments"] = 1
             mark("seen_union")
-            if seen_state is not None and n_new:
-                seen_state = self._seen_update(seen_state, new_frontier)
         else:
             new_frontier = self._empty(FRONTIER_SCHEMA)
 
@@ -1194,7 +1156,6 @@ class SparkCrawler:
             tier_rec["fold"] = tier_fold
         st["tiers"].append(tier_rec)
         st["frontier"] = new_frontier
-        return seen_state
 
     def _fold_tier(self, combined: DataFrame) -> dict:
         """One tier's nodes/secrets/edges digests+counts in ONE scan of

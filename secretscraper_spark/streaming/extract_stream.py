@@ -72,8 +72,8 @@ def stream_seen_dedup(
     unboundedly in a long-running stream. The trade (identical to the batch
     TTL-recrawl semantics): a duplicate arriving later than the horizon
     after its first occurrence re-emits. The unbounded-history variant is
-    the batch seen anti-join (plans/crawler.py, optionally behind the
-    sharded bloom filter of plans/bloom.py)."""
+    the batch seen anti-join (plans/crawler.py; plans/bucketed_seen.py
+    for its shuffle-free 10^10 storage)."""
     return (
         pages.withColumn("url_hash", F.xxhash64("url_norm"))
         .withWatermark(ts_col, watermark)

@@ -48,18 +48,6 @@ def main() -> None:
                          "written with (catalog re-registration needs it)")
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--out", default=None)
-    ap.add_argument("--seen-filter", default="exact",
-                    choices=["exact", "bucketed-bloom"],
-                    help="URL-seen check; bucketed-bloom puts the sharded "
-                         "bloom filter (no driver-side bitmap) in front of "
-                         "the exact anti-join")
-    ap.add_argument("--seen-n-buckets", type=int, default=None,
-                    help="sharded seen-filter shard count (default 64); size "
-                         "n_buckets*capacity to the expected seen-set, e.g. "
-                         "256x2^17 for a 10^8-page leg")
-    ap.add_argument("--seen-bucket-capacity", type=int, default=None,
-                    help="per-shard capacity of the sharded seen filter "
-                         "(default 2^16)")
     ap.add_argument("--white-list", action="append", default=[],
                     help="domain glob whitelist (reference -d/--domain)")
     ap.add_argument("--black-list", action="append", default=[],
@@ -144,15 +132,9 @@ def main() -> None:
         ).localCheckpoint()
         pages.count()  # materialize outside the timed window
 
-    cfg_kw = {}
-    if args.seen_n_buckets:
-        cfg_kw["seen_n_buckets"] = args.seen_n_buckets
-    if args.seen_bucket_capacity:
-        cfg_kw["seen_bucket_capacity"] = args.seen_bucket_capacity
     cfg = CrawlConfig(
         max_depth=args.max_depth, max_page_num=args.max_pages,
         white_list=args.white_list, black_list=args.black_list,
-        **cfg_kw,
     )
 
     # host-capacity probe (r4 verdict item 6): per-process MB/s of the
@@ -167,7 +149,6 @@ def main() -> None:
     t0 = time.perf_counter()
     crawler = SparkCrawler(
         spark, pages, cfg, checkpoint_dir=args.checkpoint_dir,
-        seen_filter=args.seen_filter,
         fold_outputs=args.fold_outputs,
         tier_chunk_rows=args.tier_chunk_rows, **crawler_kw,
     )
@@ -208,7 +189,7 @@ def main() -> None:
     if args.checksum or res.folded:
         # Order-invariant, filler-invariant digests: the link structure and
         # planted secrets depend only on (i, n_pages, n_hosts), so the same
-        # site crawled with different filler/parallelism/seen-filter must
+        # site crawled with different filler/parallelism must
         # reproduce these sums exactly. Outside the timed window.
         from pyspark.sql import functions as F
 

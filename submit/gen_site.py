@@ -10,7 +10,7 @@ the scale legs read a written site:
         --py-files /tmp/ss.zip submit/gen_site.py \
         --n-pages 100000000 --filler-bytes 0 --out /tmp/site_1e8
     spark-submit ... submit/crawl_job.py --pages-parquet /tmp/site_1e8 \
-        --n-pages 100000000 --seed-stride 97 --seen-filter bucketed-bloom
+        --n-pages 100000000 --seed-stride 97
 
 The generator is pure in (i, n_pages, n_hosts, filler_bytes), so the
 same arguments always produce the identical site.

@@ -148,17 +148,13 @@ class TestCrawlerFacadeOptions:
         fa.crawler.run(fa.start_urls)
         assert ck.exists() and any(ck.iterdir())  # snapshots written
 
-    def test_seen_filter_and_budget_mode_wired(self, spark):
+    def test_budget_mode_wired(self, spark):
         fa = self.facade(
-            spark,
-            {"url": "http://t.test/", "seen_filter": "bucketed-bloom",
-             "budget_mode": "host-proportional"},
+            spark, {"url": "http://t.test/", "budget_mode": "host-proportional"}
         )
-        assert fa.crawler.seen_filter == "bucketed-bloom"
         assert fa.crawler.budget_mode == "host-proportional"
         # defaults stay reference-parity
         fb = self.facade(spark, {"url": "http://t.test/"})
-        assert fb.crawler.seen_filter == "exact"
         assert fb.crawler.budget_mode == "bfs"
         assert fb.crawler.trap_cap is None
 
